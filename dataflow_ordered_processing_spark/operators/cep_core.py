@@ -231,21 +231,18 @@ def match_strict(
     first_new_end = n - n_new  # smallest window-end position inside the run
     # INVARIANT (ADVICE r6): the incoming carry holds at most k-1 rows
     # (new_carry above is trimmed to k-1 on every call), so first_new_end
-    # <= k-1 and the suppression branch below is currently DEAD —
-    # cross-batch exactly-once rests on window geometry (no k-row window
-    # fits inside a <k-row carry). The branch stays as defense-in-depth for
-    # a future longer-carry change; this guard makes such a change fail
-    # loudly instead of silently relying on the untested suppression path.
-    # RuntimeError, not assert (ADVICE r7): an assert vanishes under
-    # python -O, silently re-enabling the untested branch, and this must
-    # hold in production too.
+    # <= k-1 and no window can end inside the carry — cross-batch
+    # exactly-once rests on window geometry (no k-row window fits inside a
+    # <k-row carry). This guard replaces a carry-boundary suppression
+    # branch: a future longer-carry change fails loudly here instead of
+    # re-emitting carry-internal windows. RuntimeError, not assert (ADVICE
+    # r7): an assert vanishes under python -O, and this must hold in
+    # production too.
     if first_new_end > k - 1:
         raise RuntimeError(
-            f"carry longer than k-1 ({first_new_end} rows, k={k}): the "
-            "carry-boundary suppression below is untested — audit it first"
+            f"carry longer than k-1 ({first_new_end} rows, k={k}): windows "
+            "ending inside the carry would be re-emitted"
         )
-    if first_new_end > k - 1:
-        ok[: first_new_end - (k - 1)] = False
     ts = np.asarray(full["ts_us"], dtype=np.int64)
     if within_us is not None:
         ok &= ts[k - 1:] - ts[:nwin] <= within_us
@@ -764,11 +761,11 @@ def empty_carry() -> dict:
 
 @dataclass(frozen=True)
 class StreamMatcher:
-    """ONE mode dispatcher shared by all three streaming engines (classic /
-    sharded / TWS), so the strict-vs-skip semantics, the per-mode state
+    """ONE mode dispatcher shared by both streaming engines (classic /
+    sharded), so the strict-vs-skip semantics, the per-mode state
     codec, and the config validation can never drift between them. The
-    engine owns WHERE the state lives (tuple fields, shard map entry,
-    ValueState); this object owns WHAT it means.
+    engine owns WHERE the state lives (tuple fields or shard map entry);
+    this object owns WHAT it means.
 
     State shapes (each serializes to a fixed field count, n_state_fields):
       - strict          → the (k-1)-turn carry (4 parallel lists)
@@ -879,7 +876,7 @@ def expand_strict_times(steps) -> list:
 
 def validate_pattern_knobs(pattern, mode, within_s, within_turns, not_between):
     """THE shared config-time validation for every engine config
-    (OrderedStreamConfig / TwsConfig __post_init__): a pattern's knobs are
+    (OrderedStreamConfig.__post_init__): a pattern's knobs are
     checked by building its matcher; knobs without a pattern are refused."""
     if pattern is not None:
         stream_matcher(pattern, mode, within_s, within_turns, not_between)

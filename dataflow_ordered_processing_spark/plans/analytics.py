@@ -3,7 +3,7 @@
 Two families:
   Q1–Q7 — Spark-SQL ports of the downstream BigQuery queries the reference
   ships (README.md:89-184, run-perf-test.sh:55-92): latest-status-per-key
-  rank, completion rollup, last-N-per-key, latency percentiles, progress.
+  rank, completion rollup, last-N-per-key, progress.
   N1–N6 — the north_rule additions: tumbling/sliding/session windows,
   watermarked stream-stream join, gap detection. Batch forms here (windows
   and session_window work identically on bounded input); the streaming
@@ -144,19 +144,4 @@ def last_n_turns_per_key(ordered: DataFrame, n: int = 5) -> DataFrame:
         ordered.withColumn("_rnk", F.rank().over(w))
         .filter(F.col("_rnk") <= n)
         .drop("_rnk")
-    )
-
-
-def emission_latency_percentiles(sink: DataFrame) -> DataFrame:
-    """Q5: end-to-end in-order emission latency percentiles over the sink
-    (README.md:145-184): percentiles of ingest_ts - ts in seconds."""
-    diff = F.unix_timestamp("ingest_ts") - F.unix_timestamp("ts")
-    return sink.agg(
-        F.expr(
-            "percentile_approx("
-            "unix_timestamp(ingest_ts) - unix_timestamp(ts),"
-            "array(0.0D, 0.2D, 0.5D, 0.9D, 0.99D, 1.0D), 10000)"
-        ).alias("latency_s"),
-        F.count("*").alias("n_rows"),
-        F.avg(diff).alias("mean_latency_s"),
     )

@@ -1115,14 +1115,6 @@ def read_raw(spark: SparkSession, base: str) -> DataFrame | None:
     return spark.read.option("basePath", base).parquet(*dirs).drop("epoch")
 
 
-def console_stream(df: DataFrame, n: int = 20):
-    """Streaming console sink (the reference's StandardOutputConsumer
-    analog) — debugging aid."""
-    return df.writeStream.outputMode("append").format("console").option(
-        "numRows", n
-    ).start()
-
-
 def _pattern_spec(
     pattern,
     within_s: int | None = None,

@@ -25,33 +25,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _warmup(spark) -> None:
-    """Touch every python worker with the state-function code path once so
-    the timed run measures steady-state throughput, not 32× cold pandas
-    imports (real clusters run warm, long-lived executors)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from dataflow_ordered_processing_spark.operators.ordered_batch import (
-        ordered_emit_batch,
-    )
-
-    cores = spark.sparkContext.defaultParallelism
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"warm-{i}" for i in range(cores * 4)],
-            "turn_idx": [1] * cores * 4,
-            "role": ["user"] * cores * 4,
-            "text": ["w"] * cores * 4,
-            "tool": [None] * cores * 4,
-            "ts": pd.Timestamp("2026-01-01"),
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(cores, "conv_id")
-    ordered_emit_batch(df, impl="pandas").count()
-    df.groupBy("conv_id").agg(F.count("*")).count()
-
-
 def _hot_candidates(spark, data_path: str, threshold: int) -> set[str]:
     """Conversations whose status received_count reached the threshold in
     any committed epoch. ONE definition for both the startup detector and
@@ -334,11 +307,6 @@ def main() -> int:
         "for a fair N vs 4N comparison and for checkpoint compatibility)",
     )
     ap.add_argument(
-        "--no-warmup",
-        action="store_true",
-        help="skip the python-worker warm-up pass (cold-start measurement)",
-    )
-    ap.add_argument(
         "--max-files-per-trigger",
         type=int,
         default=None,
@@ -552,9 +520,6 @@ def main() -> int:
         merge_on_key=args.merge_on_key,
         compact_status_keep_last=args.status_keep_last,
     )
-
-    if not args.no_warmup:
-        _warmup(spark)
 
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if args.max_files_per_trigger:

@@ -2,7 +2,7 @@
 `followedBy`): the engine-integrated frontier matcher must find exactly the
 batch operator's matches (plans/cep.match_pattern(mode='skip') — the pinned
 oracle-exact semantics) across micro-batch boundaries, out-of-order arrival,
-duplicates, and all three engines — each match exactly once.
+duplicates, and both engines — each match exactly once.
 """
 
 from __future__ import annotations
@@ -288,52 +288,6 @@ def test_skip_frontier_dropped_at_completion():
     list(func(("conv-000001",), iter([full.iloc[4:]]), state))
     done = state.get
     assert list(done[15]) == [] and list(done[17]) == []  # frontier dropped
-
-
-def test_tws_skip_equals_batch_matcher(spark):
-    """TWS engine body (fake handle): skip matches across chunked
-    out-of-order arrival equal the frontier matcher over the whole
-    conversation — and the frontier lives under the 'cep_frontier' state."""
-    from test_ordered_tws import FakeHandle
-
-    from dataflow_ordered_processing_spark.streaming.ordered_tws import (
-        OrderedProcessor,
-        TwsConfig,
-    )
-
-    full = pd.concat(
-        [scenarios.conversation(c, 17) for c in range(3)], ignore_index=True
-    )
-    cfg = TwsConfig(pattern=STEPS, pattern_mode="skip")
-    matches = []
-    procs = {}
-    b1 = full[full.turn_idx % 2 == 0]
-    b2 = full[full.turn_idx % 2 == 1]
-    for batch in [b1, b2]:
-        for conv_id, g in batch.groupby("conv_id", sort=True):
-            p = procs.get(conv_id)
-            if p is None:
-                p = OrderedProcessor(cfg)
-                p.init(FakeHandle())
-                procs[conv_id] = p
-            for f in p.handleInputRows(
-                (conv_id,), iter([g.reset_index(drop=True)]), None
-            ):
-                m = f[f["row_type"] == "match"]
-                if len(m):
-                    matches.append(m[["conv_id", "match_start_idx", "match_end_idx"]])
-    got = sorted(
-        pd.concat(matches, ignore_index=True)
-        .astype({"match_start_idx": "int64", "match_end_idx": "int64"})
-        .itertuples(index=False, name=None)
-    )
-    expect = sorted(
-        _batch_expected(spark, full)[["conv_id", "start_idx", "end_idx"]]
-        .itertuples(index=False, name=None)
-    )
-    assert got == expect and len(got) > 0
-    # completion cleared every frontier
-    assert all(not p.cep_state.exists() for p in procs.values())
 
 
 def test_config_validation():

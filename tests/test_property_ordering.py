@@ -192,51 +192,3 @@ def test_sharded_func_multi_conv_matches_serial_oracle(plans, rng):
             expected.append(t)
             t += 1
         assert emitted[f"c{i}"] == expected, f"conv c{i}"
-
-
-# --------------------- TWS engine: same properties, real processor body
-@given(arrival_plan())
-@settings(max_examples=100, deadline=None)
-def test_tws_body_any_arrival_plan_matches_serial_oracle(plan):
-    """Every arrival permutation/batching/duplication drains the
-    transformWithState processor body to exactly the serial oracle —
-    including the append-only in-buffer-duplicate divergence, which must
-    CONVERGE once the gap closes (final emitted rows and final
-    duplicate_count equal the classic engine's)."""
-    from test_ordered_tws import FakeHandle
-    from dataflow_ordered_processing_spark.streaming.ordered_tws import (
-        OrderedProcessor,
-    )
-
-    present, seq, batches = plan
-    p = OrderedProcessor()
-    p.init(FakeHandle())
-    emitted, last_status = [], None
-    for b in batches:
-        if not len(b):
-            continue
-        rows = _rows(b).rename(columns={"ts_us": "ts"})
-        rows["ts"] = pd.to_datetime(rows["ts"], unit="us")
-        rows.insert(0, "conv_id", "c")
-        for frame in p.handleInputRows(("c",), iter([rows]), None):
-            data = frame[frame["row_type"] == "data"]
-            emitted.extend(int(t) for t in data["turn_idx"])
-            status = frame[frame["row_type"] == "status"]
-            if len(status):
-                last_status = status.iloc[-1]
-
-    expected = []
-    t = 1
-    while t in present:
-        expected.append(t)
-        t += 1
-    assert emitted == expected
-    if last_status is not None:
-        assert last_status["received_count"] == len(seq)
-        assert last_status["result_count"] == len(expected)
-        # duplicates of EMITTED turns are counted on arrival; duplicates
-        # still sitting in the pending buffer surface at drain time — if
-        # the gap never closes they remain uncounted (documented
-        # divergence), so the exact-count assertion applies when drained
-        if len(expected) == len(present):  # everything drained
-            assert last_status["duplicate_count"] == len(seq) - len(present)

@@ -2,8 +2,8 @@
 
   R4-A1  integer-micros money sums: BIGINT wraps silently past its per-group
          bound; exact_decimal=True must survive the same input (ADVICE #1)
-  (R4-A2 TWS cap config guard lives in test_ordered_tws.py; R4-A3 max_bucket
-   opt-in default is covered by the updated test_lsh_degenerate_bucket_capped)
+  (R4-A3 max_bucket opt-in default is covered by the updated
+   test_lsh_degenerate_bucket_capped)
 """
 
 import pytest
@@ -66,18 +66,24 @@ def _docs(spark, n):
     return spark.range(n).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
 
 
-def test_dedup_clusters_chain(spark):
+@pytest.mark.parametrize("driver_max_edges", [0, 100_000])
+def test_dedup_clusters_chain(spark, driver_max_edges):
     """A~B~C~D chain → ONE cluster labelled by the minimum id; the isolated
-    doc labels itself."""
+    doc labels itself — on the distributed rounds (0) and the driver
+    union-find path alike."""
     from dataflow_ordered_processing_spark.functions import dedup
 
     docs = _docs(spark, 6)
     pairs = _pairs(spark, (1, 2), (2, 3), (3, 4))
+    stats: dict = {}
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dedup_clusters(docs, pairs).collect()
+        for r in dedup.dedup_clusters(
+            docs, pairs, stats=stats, driver_max_edges=driver_max_edges
+        ).collect()
     }
     assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 1, 5: 5}
+    assert stats.get("driver_path", False) == bool(driver_max_edges)
 
 
 def test_dedup_clusters_long_chain_pointer_jumping(spark):
@@ -151,10 +157,12 @@ from hypothesis import given, settings, strategies as st
     )
 )
 @settings(max_examples=8, deadline=None)
-def test_dedup_clusters_matches_union_find(edges):
+@pytest.mark.parametrize("driver_max_edges", [0, 100_000])
+def test_dedup_clusters_matches_union_find(driver_max_edges, edges):
     """Property: for ANY pair graph, the min-label fixpoint equals a plain
     union-find's component minima (the reference implementation the Spark
-    operator must agree with). hypothesis can't take pytest fixtures, so
+    operator must agree with), on the distributed rounds (0) and the
+    driver union-find path alike. hypothesis can't take pytest fixtures, so
     the session comes from get_spark's getOrCreate (same config as the
     conftest fixture — reuses it when already up)."""
     from dataflow_ordered_processing_spark.functions import dedup
@@ -184,7 +192,9 @@ def test_dedup_clusters_matches_union_find(edges):
     ).filter("doc_a <> doc_b")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dedup_clusters(docs, pairs).collect()
+        for r in dedup.dedup_clusters(
+            docs, pairs, driver_max_edges=driver_max_edges
+        ).collect()
     }
     assert got == expected
 
@@ -467,7 +477,7 @@ def test_hot_key_routing_pipeline(tmp_path):
             sys.executable, os.path.join(repo, "jobs", "run_pipeline.py"),
             "--source", src, "--out", out, "--checkpoint", ckpt,
             "--available-now", "--master", "local[4]",
-            "--shuffle-partitions", "4", "--no-warmup",
+            "--shuffle-partitions", "4",
             "--hot-keys", hot_conv, "--hot-key-threshold", "1",
         ],
         capture_output=True, text=True, timeout=600,
@@ -532,7 +542,7 @@ def test_hot_key_supersede_and_incremental(spark, tmp_path):
         sys.executable, os.path.join(repo, "jobs", "run_pipeline.py"),
         "--source", src, "--out", out, "--checkpoint", ckpt,
         "--available-now", "--master", "local[4]",
-        "--shuffle-partitions", "4", "--no-warmup",
+        "--shuffle-partitions", "4",
     ]
     # run 1: NO routing — conv-000000 lands in the keyed data sink
     r1 = subprocess.run(base_cmd, capture_output=True, text=True, timeout=600)
@@ -795,7 +805,7 @@ def test_null_key_reaches_dlq_under_hot_routing(spark, tmp_path):
             sys.executable, os.path.join(repo, "jobs", "run_pipeline.py"),
             "--source", src, "--out", out, "--checkpoint", ckpt,
             "--available-now", "--master", "local[4]",
-            "--shuffle-partitions", "4", "--no-warmup",
+            "--shuffle-partitions", "4",
             "--hot-keys", "conv-000000",
         ],
         capture_output=True, text=True, timeout=600,

@@ -283,7 +283,7 @@ def test_auto_hot_keys_routes_detected_key_across_restarts(spark, tmp_path):
         sys.executable, os.path.join(repo, "jobs", "run_pipeline.py"),
         "--source", src, "--out", out, "--checkpoint", ckpt,
         "--available-now", "--master", "local[4]",
-        "--shuffle-partitions", "4", "--no-warmup",
+        "--shuffle-partitions", "4",
         "--hot-key-threshold", str(hot_n),
     ]
 

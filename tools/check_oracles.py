@@ -46,7 +46,6 @@ def driver_like_spark():
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
