@@ -88,12 +88,10 @@ def main() -> int:
     emitted = run("ordered_stream", stream_run)
 
     def sharded_run():
-        from dataflow_ordered_processing_spark.streaming import ordered_stream_sharded
-
         src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stage)
         out_name = "bench_sharded_out"
         q = (
-            ordered_stream_sharded(src, n_shards=cpus * 8)
+            ordered_stream(src, n_shards=cpus * 8)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(out_name)
@@ -135,9 +133,7 @@ def main() -> int:
             data_path=os.path.join(sink_dir, "data"),
             checkpoint=os.path.join(sink_dir, "ckpt"),
         )
-        # flagship path: the sharded engine (row-identical to classic; see
-        # BENCH/BASELINE.md for the A/B)
-        q = start_ordered_pipeline(src, cfgS, engine="sharded", n_shards=cpus * 8)
+        q = start_ordered_pipeline(src, cfgS, n_shards=cpus * 8)
         q.processAllAvailable()
         q.stop()
         sunk = read_sink(spark, cfgS.data_path)

@@ -417,27 +417,6 @@ def empty_frontier() -> dict:
     }
 
 
-def frontier_from_lists(anchor_idx, anchor_ts_us, wait, next_expected) -> dict:
-    """Rebuild a skip-mode frontier from state-schema lists — the ONE
-    deserializer shared by every engine's state layer (mirrors
-    carry_from_lists)."""
-    return {
-        "anchor_idx": np.asarray(list(anchor_idx or []), dtype="int64"),
-        "anchor_ts_us": np.asarray(list(anchor_ts_us or []), dtype="int64"),
-        "wait": np.asarray(list(wait or []), dtype="int64"),
-        "next_expected": None if next_expected is None else int(next_expected),
-    }
-
-
-def frontier_to_lists(fr: dict) -> tuple[list, list, list, int | None]:
-    return (
-        [int(x) for x in fr["anchor_idx"]],
-        [int(x) for x in fr["anchor_ts_us"]],
-        [int(x) for x in fr["wait"]],
-        None if fr["next_expected"] is None else int(fr["next_expected"]),
-    )
-
-
 INF_IDX = np.int64(2**62)  # "no pending guard" sentinel (fits a LongType)
 
 
@@ -696,60 +675,6 @@ def match_skip_quant(
     return {c: v[order] for c, v in out.items()}, new_fr
 
 
-def frontier_q_from_lists(
-    anchor_idx, anchor_ts_us, wait, cpos, guard_seen,
-    open_s, open_s_ts, open_e, open_e_ts, next_expected,
-) -> dict:
-    return {
-        "anchor_idx": np.asarray(list(anchor_idx or []), dtype="int64"),
-        "anchor_ts_us": np.asarray(list(anchor_ts_us or []), dtype="int64"),
-        "wait": np.asarray(list(wait or []), dtype="int64"),
-        "cpos": np.asarray(list(cpos or []), dtype="int64"),
-        "guard_seen": np.asarray(list(guard_seen or []), dtype="int64"),
-        "open_s": np.asarray(list(open_s or []), dtype="int64"),
-        "open_s_ts": np.asarray(list(open_s_ts or []), dtype="int64"),
-        "open_e": np.asarray(list(open_e or []), dtype="int64"),
-        "open_e_ts": np.asarray(list(open_e_ts or []), dtype="int64"),
-        "next_expected": None if next_expected is None else int(next_expected),
-    }
-
-
-def frontier_q_to_lists(fr: dict) -> tuple:
-    return (
-        [int(x) for x in fr["anchor_idx"]],
-        [int(x) for x in fr["anchor_ts_us"]],
-        [int(x) for x in fr["wait"]],
-        [int(x) for x in fr["cpos"]],
-        [int(x) for x in fr["guard_seen"]],
-        [int(x) for x in fr["open_s"]],
-        [int(x) for x in fr["open_s_ts"]],
-        [int(x) for x in fr["open_e"]],
-        [int(x) for x in fr["open_e_ts"]],
-        None if fr["next_expected"] is None else int(fr["next_expected"]),
-    )
-
-
-def carry_from_lists(idx, role, tool, ts_us) -> dict:
-    """Rebuild a carry dict from four (possibly-None) sequences — the ONE
-    deserializer shared by every engine's state layer."""
-    return {
-        "turn_idx": np.asarray(list(idx or []), dtype="int64"),
-        "role": np.asarray(list(role or []), dtype=object),
-        "tool": np.asarray(list(tool or []), dtype=object),
-        "ts_us": np.asarray(list(ts_us or []), dtype="int64"),
-    }
-
-
-def carry_to_lists(carry: dict) -> tuple[list, list, list, list]:
-    """Carry dict → four plain lists (state-schema friendly)."""
-    return (
-        [int(x) for x in carry["turn_idx"]],
-        list(carry["role"]),
-        list(carry["tool"]),
-        [int(x) for x in carry["ts_us"]],
-    )
-
-
 def empty_carry() -> dict:
     return {
         "turn_idx": np.empty(0, np.int64),
@@ -761,18 +686,18 @@ def empty_carry() -> dict:
 
 @dataclass(frozen=True)
 class StreamMatcher:
-    """ONE mode dispatcher shared by both streaming engines (classic /
-    sharded), so the strict-vs-skip semantics, the per-mode state
-    codec, and the config validation can never drift between them. The
-    engine owns WHERE the state lives (tuple fields or shard map entry);
-    this object owns WHAT it means.
+    """The streaming engine's mode dispatcher: strict vs skip (plain or
+    quantified) semantics and the validated knobs live here; the engine
+    owns WHERE the per-conversation state lives (the shard dict's _CEP side
+    map, pickled with the rest of the shard state) and passes None for a
+    conversation that has none yet.
 
-    State shapes (each serializes to a fixed field count, n_state_fields):
-      - strict          → the (k-1)-turn carry (4 parallel lists)
-      - skip            → the partial-match frontier (3 int lists +
-                          next_expected; 4 fields)
+    State shapes:
+      - strict          → the (k-1)-turn carry (4 parallel arrays)
+      - skip            → the partial-match frontier (3 int arrays +
+                          next_expected)
       - skip+quantified → the extended frontier (candidate cpos/guard_seen
-                          + per-quant-step open runs; 10 fields)
+                          + per-quant-step open runs)
     """
 
     steps: tuple
@@ -781,10 +706,6 @@ class StreamMatcher:
     within_turns: int | None
     guards: dict  # {segment_i: Step}, skip mode only
     quant: bool = False  # any Times step (skip mode only)
-
-    @property
-    def n_state_fields(self) -> int:
-        return 10 if self.quant else 4
 
     def match(
         self, run: dict, state: dict | None, final: bool = False
@@ -809,29 +730,6 @@ class StreamMatcher:
                 self.guards,
             )
         return match_strict(self.steps, run, state, self.within_us)
-
-    def empty_state(self) -> dict:
-        if self.mode == "skip":
-            if self.quant:
-                return empty_frontier_q(
-                    sum(1 for s in self.steps if isinstance(s, Times))
-                )
-            return empty_frontier()
-        return empty_carry()
-
-    def state_to_lists(self, st: dict) -> tuple:
-        if self.mode == "skip":
-            return frontier_q_to_lists(st) if self.quant else frontier_to_lists(st)
-        return carry_to_lists(st)
-
-    def state_from_lists(self, *fields) -> dict:
-        if self.mode == "skip":
-            return (
-                frontier_q_from_lists(*fields)
-                if self.quant
-                else frontier_from_lists(*fields)
-            )
-        return carry_from_lists(*fields)
 
 
 def expand_strict_times(steps) -> list:

@@ -113,7 +113,11 @@ def _per_key_prefix_len(ranked: DataFrame, block: int, initial_idx: int) -> Data
 def salted_ordered_emit_batch(
     df: DataFrame, block: int = 1024, initial_idx: int = 1
 ) -> DataFrame:
-    """Two-phase batch ordering; output identical to ordered_emit_batch."""
+    """Two-phase batch ordering; output identical to ordered_emit_batch.
+
+    Building the plan runs a Spark job: ``_salted_ranked`` calls
+    ``localCheckpoint(eager=True)``, so this call itself scans, dedupes and
+    materializes the salted input before any action on the result."""
     ranked = _salted_ranked(df, block, initial_idx)
     prefix = _per_key_prefix_len(ranked, block, initial_idx)
     t = F.col("turn_idx").cast("long")
@@ -174,7 +178,12 @@ def adaptive_ordered_emit_batch(
 ) -> DataFrame:
     """Route hot keys through the two-phase plan, cold keys through the
     single-phase plan; union the results. The hot-key set is broadcast —
-    no extra shuffle of the big side beyond the two plans' own exchanges."""
+    no extra shuffle of the big side beyond the two plans' own exchanges.
+
+    Building the plan runs a Spark job: the salted branch's
+    ``localCheckpoint(eager=True)`` (in ``_salted_ranked``) computes the
+    hot-key set and materializes the hot rows during this call, even when
+    no key is hot."""
     from .ordered_batch import ordered_emit_batch
 
     hot = F.broadcast(hot_keys(df, hot_threshold))

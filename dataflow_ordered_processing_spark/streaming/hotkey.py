@@ -1,7 +1,7 @@
 """Hot-key side-channel ordering: incremental, idempotent, supersede-aware.
 
-A conversation routed with ``--hot-keys`` bypasses the keyed streaming
-operator into a raw epoch sink (``sinks.raw_passthrough_sink``); this module
+A conversation routed with ``--hot-keys`` bypasses the shard-keyed
+streaming operator (``ordered_stream``) into a raw epoch sink (``sinks.raw_passthrough_sink``); this module
 turns that accumulated raw channel into ordered output with three
 properties the naive "re-sort everything each run" approach lacks
 (round-4 review findings):

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from .ordered_stream import OrderedStreamConfig, ordered_stream
+from .ordered_stream import OrderedStreamConfig, ordered_stream, resolve_n_shards
 
 
 @dataclass(frozen=True)
@@ -1162,28 +1162,25 @@ def _pattern_spec(
 
 def _check_engine_marker(
     checkpoint: str,
-    engine: str,
-    n_shards: int | None,
+    n_shards: int,
     pattern_spec: dict | None = None,
 ) -> None:
-    """Pin (engine, n_shards) to the checkpoint on first start; fail fast on
-    mismatch at resume. n_shards is baked into the sharded engine's state
-    key (pmod(xxhash64(conv_id), n_shards)) — resuming with a different
-    value silently re-keys conversations to different shards, stranding
-    their state (cursor, dedup counters, pending buffer): already-emitted
-    turns would re-emit with fresh emit_seq and buffered turns would drop.
-    Same for switching engines (state schemas are incompatible). A marker
-    file next to the checkpoint makes the mismatch an error, not data loss.
-    (Local-fs marker: on HDFS/S3 checkpoints, pin via job config instead.)"""
+    """Pin (n_shards, pattern) to the checkpoint on first start; fail fast
+    on mismatch at resume. n_shards is baked into the engine's state key
+    (pmod(xxhash64(conv_id), n_shards)) — resuming with a different value
+    silently re-keys conversations to different shards, stranding their
+    state (cursor, dedup counters, pending buffer): already-emitted turns
+    would re-emit with fresh emit_seq and buffered turns would drop. The
+    marker still records ``"engine": "sharded"`` so a checkpoint written by
+    the former per-conversation ("classic") engine, whose state layout is
+    incompatible, is refused instead of misread. A marker file next to the
+    checkpoint makes the mismatch an error, not data loss. (Local-fs
+    marker: on HDFS/S3 checkpoints, pin via job config instead.)"""
     path = checkpoint.removeprefix("file:")
     if not os.path.isdir(path):  # first start — checkpoint not created yet
         os.makedirs(path, exist_ok=True)
     marker = os.path.join(path, "_ordered_engine.json")
-    current = {
-        "engine": engine,
-        "n_shards": n_shards if engine == "sharded" else None,
-        "pattern": pattern_spec,
-    }
+    current = {"engine": "sharded", "n_shards": n_shards, "pattern": pattern_spec}
     if not os.path.exists(marker) and os.path.isdir(os.path.join(path, "offsets")):
         # committed streaming state exists but predates the marker — its
         # n_shards is unknowable, so resuming under ANY assumed value may
@@ -1202,6 +1199,12 @@ def _check_engine_marker(
 
         with open(marker) as f:
             prior = json.load(f)
+        if prior.get("engine") != "sharded":
+            raise ValueError(
+                f"checkpoint {checkpoint!r} was written by the "
+                f"{prior.get('engine')!r} engine, whose per-conversation state "
+                "this engine cannot read. Start a fresh checkpoint."
+            )
         # pre-CEP markers carry no "pattern" key; they pinned pattern-less
         # configs, so normalize rather than refusing every old checkpoint.
         # Ditto the short-lived list form (steps only, no within) — upgrade
@@ -1234,27 +1237,20 @@ def start_ordered_pipeline(
     source: DataFrame,
     sink: SinkConfig,
     stream_cfg: OrderedStreamConfig | None = None,
-    engine: str = "classic",
     n_shards: int | None = None,
 ) -> StreamingQuery:
     """Wire source → ordered processor → dual sink; return the running query.
 
     ``source`` is a streaming DataFrame with TRANSCRIPT_SCHEMA (e.g.
     readStream over an Iceberg/parquet directory of arrival batches).
-    ``engine='sharded'`` selects the shard-keyed state variant (same output,
-    ~3× throughput; see ordered_sharded.py). ``n_shards=None`` resolves to
-    8 × defaultParallelism — the measured sweet spot (~8 shards per core,
-    BENCH/BASELINE.md shard sweep); the choice is pinned in a checkpoint
-    marker and validated on resume.
+    ``n_shards=None`` resolves to 8 × defaultParallelism — the measured
+    sweet spot (~8 shards per core, BENCH/BASELINE.md shard sweep); the
+    choice is pinned in a checkpoint marker and validated on resume.
     """
-    from . import build_ordered_stream, resolve_n_shards
-
-    if engine == "sharded":
-        n_shards = resolve_n_shards(source, n_shards)
+    n_shards = resolve_n_shards(source, n_shards)
     if sink.checkpoint:
         _check_engine_marker(
             sink.checkpoint,
-            engine,
             n_shards,
             _pattern_spec(
                 stream_cfg.pattern if stream_cfg else None,
@@ -1264,7 +1260,7 @@ def start_ordered_pipeline(
                 stream_cfg.pattern_not_between if stream_cfg else None,
             ),
         )
-    unified = build_ordered_stream(source, stream_cfg, engine=engine, n_shards=n_shards)
+    unified = ordered_stream(source, stream_cfg, n_shards=n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

@@ -314,14 +314,6 @@ def main() -> int:
         "sustained-throughput measurement over steady-state batches)",
     )
     ap.add_argument(
-        "--engine",
-        choices=["classic", "sharded"],
-        default="classic",
-        help="classic = state per conv_id (applyInPandasWithState per key); "
-        "sharded = state per hash shard, one invocation per shard per batch "
-        "(amortizes per-group overhead across conversations)",
-    )
-    ap.add_argument(
         "--export",
         choices=["avro", "json", "parquet"],
         default=None,
@@ -333,7 +325,7 @@ def main() -> int:
         "--n-shards",
         type=int,
         default=None,
-        help="shard count for --engine sharded; default 8 x defaultParallelism "
+        help="state shard count; default 8 x defaultParallelism "
         "(measured sweet spot). PINNED to the checkpoint on first start: "
         "n_shards is baked into the state key, so resuming an existing "
         "checkpoint with a different value is refused (it would strand "
@@ -411,7 +403,7 @@ def main() -> int:
         "rows (read back with read_sink(..., table='matches')). Comma-"
         "separated steps 'name=role' or 'name=role/tool' or 'name=/tool', "
         "e.g. 'u=user,a=assistant,c=tool/code'. The pattern is pinned in "
-        "the checkpoint engine marker (the state schema depends on it)",
+        "the checkpoint engine marker (the matcher state depends on it)",
     )
     ap.add_argument(
         "--pattern-within-s",
@@ -481,11 +473,13 @@ def main() -> int:
     from dataflow_ordered_processing_spark.streaming import (
         BufferMetricsListener,
         OrderedStreamConfig,
-        build_ordered_stream,
+        ordered_stream,
+        resolve_n_shards,
     )
     from dataflow_ordered_processing_spark.streaming.sinks import (
         SinkConfig,
         _check_engine_marker,
+        _pattern_spec,
         export_table,
         raw_passthrough_sink,
         read_sink,
@@ -524,8 +518,6 @@ def main() -> int:
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if args.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", args.max_files_per_trigger)
-    from dataflow_ordered_processing_spark.streaming import resolve_n_shards
-
     src = reader.parquet(args.source)
 
     # ---- hot-key routing (north_rule skew, streaming answer) ----
@@ -583,13 +575,9 @@ def main() -> int:
             F.col("conv_id").isNull() | ~F.col("conv_id").isin(hot_list)
         )
 
-    n_shards = args.n_shards
-    if args.engine == "sharded":
-        n_shards = resolve_n_shards(src, n_shards)
-    from dataflow_ordered_processing_spark.streaming.sinks import _pattern_spec
-
+    n_shards = resolve_n_shards(src, args.n_shards)
     _check_engine_marker(
-        args.checkpoint, args.engine, n_shards,
+        args.checkpoint, n_shards,
         _pattern_spec(
             pattern,
             args.pattern_within_s,
@@ -598,7 +586,7 @@ def main() -> int:
             not_between,
         ),
     )
-    unified = build_ordered_stream(src, cfg, engine=args.engine, n_shards=n_shards)
+    unified = ordered_stream(src, cfg, n_shards=n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

@@ -54,15 +54,15 @@ class StagedStream:
         self._i += 1
 
 
-def run_to_memory(spark, tmpdir, batches, cfg=None, name=None, engine="classic", n_shards=8):
+def run_to_memory(spark, tmpdir, batches, cfg=None, name=None, n_shards=8):
     """Feed arrival batches one micro-batch at a time through the ordered
     stream into a memory sink; returns (query, table_name, per-step row
-    counts). engine='sharded' routes through the shard-keyed state variant."""
-    from dataflow_ordered_processing_spark.streaming import build_ordered_stream
+    counts)."""
+    from dataflow_ordered_processing_spark.streaming import ordered_stream
 
     name = name or f"out_{uuid.uuid4().hex[:8]}"
     st = StagedStream(spark, tmpdir)
-    unified = build_ordered_stream(st.source(), cfg, engine=engine, n_shards=n_shards)
+    unified = ordered_stream(st.source(), cfg, n_shards=n_shards)
     q = (
         unified.writeStream.outputMode("append")
         .format("memory")

@@ -8,6 +8,7 @@ the conversation's completion proves it maximal.
 
 from __future__ import annotations
 
+import pickle
 import random
 
 import numpy as np
@@ -18,8 +19,6 @@ from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
     Times,
     empty_frontier_q,
-    frontier_q_from_lists,
-    frontier_q_to_lists,
     match_skip_quant,
 )
 from dataflow_ordered_processing_spark.plans.cep import match_pattern
@@ -96,7 +95,7 @@ def _stream_got(spark, tmp_path, batches, cfg, **run_kw):
         q.stop()
 
 
-def test_quant_stream_equals_batch_classic(spark, tmp_path):
+def test_quant_stream_equals_batch(spark, tmp_path):
     full = _random_convs(3)
     b1 = full[full.turn_idx % 2 == 0]
     b2 = pd.concat([full[full.turn_idx % 2 == 1], full.head(6)], ignore_index=True)
@@ -117,7 +116,7 @@ def test_quant_stream_equals_batch_sharded(spark, tmp_path):
         pattern=STEPS, pattern_mode="skip", pattern_within_turns=9
     )
     got = _stream_got(
-        spark, tmp_path, [b1, b2, b3], cfg, engine="sharded", n_shards=4
+        spark, tmp_path, [b1, b2, b3], cfg, n_shards=4
     )
     expect = _batch_expected(spark, full, within_turns=9)
     assert got == expect and len(got) > 0
@@ -303,7 +302,7 @@ def test_quant_property_vs_bruteforce():
                 steps, rn, fr, within_us, within_turns, guards,
                 final=(i == len(rows)),
             )
-            fr = frontier_q_from_lists(*frontier_q_to_lists(fr))
+            fr = pickle.loads(pickle.dumps(fr, protocol=5))
             got.extend(zip(mm["start_idx"].tolist(), mm["end_idx"].tolist()))
         assert sorted(got) == expect, (
             f"trial {trial}: {steps} guards={guards} "
@@ -323,17 +322,14 @@ def test_quant_state_schema_and_marker(tmp_path):
     plain = (Step("t", role="tool"), Step("u", role="user"))
     quant = (Times(Step("t", role="tool"), 2, None), Step("u", role="user"))
     ckpt = os.path.join(str(tmp_path), "ckpt")
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(quant, None, "skip"))
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, 8, _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, 8, _pattern_spec(quant, None, "skip"))
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(
-            ckpt, "classic", None, _pattern_spec(plain, None, "skip")
-        )
+        _check_engine_marker(ckpt, 8, _pattern_spec(plain, None, "skip"))
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
             ckpt,
-            "classic",
-            None,
+            8,
             _pattern_spec(
                 (Times(Step("t", role="tool"), 3, None), Step("u", role="user")),
                 None,
@@ -342,23 +338,27 @@ def test_quant_state_schema_and_marker(tmp_path):
         )
 
 
-def test_quant_classic_state_tuple_has_q_fields():
+def test_quant_shard_state_has_q_fields():
     from test_cep_stream import _FakeGroupState
 
     from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
+        _CEP,
+        _TOMBS,
+        make_sharded_func,
     )
 
     full = _random_convs(11, n_convs=1, max_turns=14)
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
-    func = make_ordered_func(cfg)
+    func = make_sharded_func(cfg)
     state = _FakeGroupState()
-    list(func(("q000",), iter([full.iloc[:8]]), state))
-    assert len(state.get) == 25  # 15 base + 10 quant-frontier fields
-    list(func(("q000",), iter([full.iloc[8:]]), state))
-    done = state.get
-    # completion dropped candidates and open runs
-    assert list(done[15]) == [] and all(v == -1 for v in done[20])
+    list(func((0,), iter([full.iloc[:8]]), state))
+    fr = pickle.loads(state.get[0])[_CEP]["q000"]
+    # the quantified frontier: candidates + per-quant-step open runs
+    assert {"cpos", "guard_seen", "open_s", "open_s_ts", "open_e", "open_e_ts"} <= set(fr)
+    list(func((0,), iter([full.iloc[8:]]), state))
+    done = pickle.loads(state.get[0])
+    # completion dropped candidates and open runs with the whole entry
+    assert "q000" in done[_TOMBS] and "q000" not in done.get(_CEP, {})
 
 
 def test_quant_validation_and_strict_expansion():
@@ -444,13 +444,12 @@ def test_in_set_marker_roundtrip(tmp_path):
     )
     ckpt = os.path.join(str(tmp_path), "ckpt")
     spec = _pattern_spec(steps, None, "skip")
-    _check_engine_marker(ckpt, "classic", None, spec)
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(steps, None, "skip"))
+    _check_engine_marker(ckpt, 8, spec)
+    _check_engine_marker(ckpt, 8, _pattern_spec(steps, None, "skip"))
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
             ckpt,
-            "classic",
-            None,
+            8,
             _pattern_spec(
                 (Times(Step("b", role=("tool", "assistant")), 2, None),
                  Step("u", role="user")),

@@ -2,11 +2,12 @@
 `followedBy`): the engine-integrated frontier matcher must find exactly the
 batch operator's matches (plans/cep.match_pattern(mode='skip') — the pinned
 oracle-exact semantics) across micro-batch boundaries, out-of-order arrival,
-duplicates, and both engines — each match exactly once.
+duplicates, and shard counts — each match exactly once.
 """
 
 from __future__ import annotations
 
+import pickle
 import random
 
 import numpy as np
@@ -16,8 +17,6 @@ import pytest
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
     empty_frontier,
-    frontier_from_lists,
-    frontier_to_lists,
     match_skip,
     stream_matcher,
 )
@@ -109,9 +108,7 @@ def test_skip_stream_equals_batch_across_boundaries(spark, tmp_path):
 def test_skip_sharded_equals_batch(spark, tmp_path):
     full, batches = _damaged_batches()
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
-    got = _stream_matches(
-        spark, tmp_path, batches, cfg, engine="sharded", n_shards=4
-    )
+    got = _stream_matches(spark, tmp_path, batches, cfg, n_shards=4)
     _assert_equal(got, _batch_expected(spark, full))
 
 
@@ -153,8 +150,8 @@ def test_skip_stream_not_between_guard(spark, tmp_path):
 
 def test_skip_property_vs_bruteforce():
     """Randomized splits / bounds / guards vs a pure-Python brute-force
-    oracle, with the frontier round-tripped through the state-list codec
-    every hop (exactly what the engines persist)."""
+    oracle, with the frontier round-tripped through pickle every hop
+    (exactly what the shard state store persists)."""
 
     def brute(steps, rows, within_us, within_turns, guards):
         def m(s, r):
@@ -232,7 +229,7 @@ def test_skip_property_vs_bruteforce():
                 "ts_us": np.array([r[3] for r in chunk], dtype=np.int64),
             }
             m, fr = match_skip(steps, run, fr, within_us, within_turns, guards)
-            fr = frontier_from_lists(*frontier_to_lists(fr))
+            fr = pickle.loads(pickle.dumps(fr, protocol=5))
             got.extend(
                 zip(
                     m["start_idx"].tolist(),
@@ -275,19 +272,22 @@ def test_skip_frontier_dropped_at_completion():
     from test_cep_stream import _FakeGroupState
 
     from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
+        _CEP,
+        _TOMBS,
+        make_sharded_func,
     )
 
     full = scenarios.conversation(1, 6)
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
-    func = make_ordered_func(cfg)
+    func = make_sharded_func(cfg)
     state = _FakeGroupState()
-    list(func(("conv-000001",), iter([full.iloc[:4]]), state))
-    mid = state.get
-    assert len(mid) == 19 and len(mid[15]) > 0  # open anchors carried
-    list(func(("conv-000001",), iter([full.iloc[4:]]), state))
-    done = state.get
-    assert list(done[15]) == [] and list(done[17]) == []  # frontier dropped
+    list(func((0,), iter([full.iloc[:4]]), state))
+    mid = pickle.loads(state.get[0])
+    assert len(mid[_CEP]["conv-000001"]["anchor_idx"]) > 0  # open anchors carried
+    list(func((0,), iter([full.iloc[4:]]), state))
+    done = pickle.loads(state.get[0])
+    assert "conv-000001" in done[_TOMBS]  # completed
+    assert "conv-000001" not in done.get(_CEP, {})  # frontier dropped
 
 
 def test_config_validation():
@@ -317,14 +317,12 @@ def test_marker_pins_mode(tmp_path):
 
     ckpt = os.path.join(str(tmp_path), "ckpt")
     spec_skip = _pattern_spec(STEPS, None, "skip", 6, GUARD)
-    _check_engine_marker(ckpt, "classic", None, spec_skip)
-    _check_engine_marker(ckpt, "classic", None, spec_skip)  # same: fine
+    _check_engine_marker(ckpt, 8, spec_skip)
+    _check_engine_marker(ckpt, 8, spec_skip)  # same: fine
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS))
+        _check_engine_marker(ckpt, 8, _pattern_spec(STEPS))
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(
-            ckpt, "classic", None, _pattern_spec(STEPS, None, "skip", 9, GUARD)
-        )
+        _check_engine_marker(ckpt, 8, _pattern_spec(STEPS, None, "skip", 9, GUARD))
     # pre-r7 strict marker (no mode keys) still resumes strict configs
     import json
 
@@ -333,8 +331,8 @@ def test_marker_pins_mode(tmp_path):
     with open(os.path.join(ckpt2, "_ordered_engine.json"), "w") as f:
         json.dump(
             {
-                "engine": "classic",
-                "n_shards": None,
+                "engine": "sharded",
+                "n_shards": 8,
                 "pattern": {
                     "steps": [[s.name, s.role, s.tool] for s in STEPS],
                     "within_s": None,
@@ -342,7 +340,7 @@ def test_marker_pins_mode(tmp_path):
             },
             f,
         )
-    _check_engine_marker(ckpt2, "classic", None, _pattern_spec(STEPS))
+    _check_engine_marker(ckpt2, 8, _pattern_spec(STEPS))
 
 
 def test_pipeline_sink_lands_skip_matches(spark, tmp_path):

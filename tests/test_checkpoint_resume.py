@@ -7,7 +7,6 @@ import json
 import os
 
 import pandas as pd
-import pytest
 
 from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
 from dataflow_ordered_processing_spark.streaming import (
@@ -19,8 +18,7 @@ from dataflow_ordered_processing_spark.streaming.sinks import SinkConfig, read_s
 from streaming_utils import StagedStream
 
 
-@pytest.mark.parametrize("engine", ["classic", "sharded"])
-def test_checkpoint_kill_and_resume(spark, tmp_path, engine):
+def test_checkpoint_kill_and_resume(spark, tmp_path):
     batches = scenario("random_permutation")
     base = str(tmp_path)
     sink = SinkConfig(
@@ -33,7 +31,7 @@ def test_checkpoint_kill_and_resume(spark, tmp_path, engine):
     st = StagedStream(spark, base)
     try:
         # leg 1: first two arrival batches, then kill the query
-        q = start_ordered_pipeline(st.source(), sink, engine=engine, n_shards=8)
+        q = start_ordered_pipeline(st.source(), sink, n_shards=8)
         for b in batches[:2]:
             st.push(b)
             q.processAllAvailable()
@@ -43,7 +41,7 @@ def test_checkpoint_kill_and_resume(spark, tmp_path, engine):
         committed_leg1 = read_sink(spark, sink.data_path).count()
 
         # leg 2: restart from the SAME checkpoint; feed the rest
-        q2 = start_ordered_pipeline(st.source(), sink, engine=engine, n_shards=8)
+        q2 = start_ordered_pipeline(st.source(), sink, n_shards=8)
         for b in batches[2:]:
             st.push(b)
             q2.processAllAvailable()

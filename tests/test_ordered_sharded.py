@@ -1,10 +1,12 @@
-"""Sharded-state streaming engine: row-level parity with the classic
-per-key operator across the scenario suite (same data rows, same statuses,
-same duplicate/TTL/capped-drain semantics)."""
+"""Shard-keyed streaming engine: row-level parity with the serial oracle
+across the scenario suite (same data rows, same statuses, same
+duplicate/TTL/capped-drain semantics)."""
 
+import numpy as np
 import pandas as pd
 import pytest
 
+from dataflow_ordered_processing_spark.operators import ordered_core as core
 from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
 from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
 
@@ -40,7 +42,7 @@ def _rows(spark, name, row_type, sort_cols):
 )
 def test_sharded_matches_serial_oracle(spark, tmp_path, scen):
     batches = scenario(scen)
-    q, name, _ = run_to_memory(spark, str(tmp_path), batches, engine="sharded")
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
         got = _rows(spark, name, "data", ["conv_id", "turn_idx"])[CMP]
         want = (
@@ -55,28 +57,49 @@ def test_sharded_matches_serial_oracle(spark, tmp_path, scen):
         q.stop()
 
 
-def test_sharded_statuses_match_classic(spark, tmp_path):
-    """Status rows (the per-batch snapshots) must be identical between the
-    two engines, batch for batch."""
+def _serial_status_replay(batches) -> list[tuple]:
+    """Per-batch status snapshots from a plain-Python replay: one
+    apply_batch + status_dict per conversation per arrival batch."""
+    states: dict = {}
+    out = []
+    for b in batches:
+        for conv_id, g in b.groupby("conv_id", sort=False):
+            st = states.setdefault(conv_id, core.OrderedState())
+            core.apply_batch(st, g.reset_index(drop=True))
+            s = core.status_dict(conv_id, st)
+            out.append(tuple(s[c] for c in STATUS_CMP))
+    return sorted(out, key=lambda r: (r[0], r[5]))  # (conv_id, received_count)
+
+
+def _py(v):
+    """Spark/pandas scalar → plain Python (NULL/NaN → None)."""
+    if v is None or (isinstance(v, float) and np.isnan(v)):
+        return None
+    if isinstance(v, (bool, np.bool_)):
+        return bool(v)
+    return v if isinstance(v, str) else int(v)
+
+
+def test_sharded_statuses_match_serial_replay(spark, tmp_path):
+    """Status rows (the per-batch snapshots) must equal a serial replay of
+    the per-conversation state machine, batch for batch."""
     batches = scenario("multi_conversation")
-    qa, na, _ = run_to_memory(spark, str(tmp_path) + "/a", batches, engine="classic")
-    qb, nb, _ = run_to_memory(spark, str(tmp_path) + "/b", batches, engine="sharded")
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
-        key = ["conv_id", "received_count"]
-        a = _rows(spark, na, "status", key)[STATUS_CMP]
-        b = _rows(spark, nb, "status", key)[STATUS_CMP]
-        assert len(a) > 0
-        pd.testing.assert_frame_equal(a, b)
+        rows = _rows(spark, name, "status", ["conv_id", "received_count"])
+        got = [tuple(_py(v) for v in r) for r in rows[STATUS_CMP].itertuples(index=False)]
+        want = _serial_status_replay(batches)
+        assert len(got) > len(batches)  # several conversations per batch
+        assert got == want
     finally:
-        qa.stop()
-        qb.stop()
+        q.stop()
 
 
 def test_sharded_duplicate_counts(spark, tmp_path):
     # default tombstone config: post-completion re-delivery is discarded and
-    # counted (with cleanup_on_complete=True it would re-emit, like classic)
+    # counted (with cleanup_on_complete=True it would re-emit)
     batches = scenario("duplicates")
-    q, name, _ = run_to_memory(spark, str(tmp_path), batches, engine="sharded")
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
         st = _rows(spark, name, "status", ["received_count"])
         last = st.iloc[-1]
@@ -89,14 +112,13 @@ def test_sharded_duplicate_counts(spark, tmp_path):
 
 def test_sharded_capped_drain(spark, tmp_path):
     """O9: max_emit_per_batch caps each batch's drain; the remainder emits on
-    subsequent arrivals (same contract as the classic engine)."""
+    subsequent arrivals."""
     batches = scenario("reverse_order")  # 3,2,1 → full drain on 3rd arrival
     q, name, _ = run_to_memory(
         spark,
         str(tmp_path),
         batches,
         cfg=OrderedStreamConfig(max_emit_per_batch=2),
-        engine="sharded",
     )
     try:
         data = _rows(spark, name, "data", ["emit_seq"])
@@ -113,10 +135,7 @@ def test_sharded_capped_drain(spark, tmp_path):
 import pickle
 import time as _time
 
-import numpy as np
-
-from dataflow_ordered_processing_spark.operators import ordered_core as core
-from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     _HB_AT,
     _conv_to_tuple,
     make_sharded_func,
@@ -199,7 +218,7 @@ def test_ttl_eviction_never_drops_capped_drain_remainder():
 
 def test_busy_shard_still_heartbeats_idle_keys():
     """Finding 2: arrivals for key B must not starve co-sharded idle key A of
-    heartbeat statuses/TTL (per-key timer semantics of the classic engine)."""
+    heartbeat statuses/TTL (per-key timer semantics)."""
     cfg = OrderedStreamConfig(status_heartbeat_ms=50, emit_status_every_batch=False)
     func = make_sharded_func(cfg)
     # A idle with a gap (buffered turn 2); last sweep long ago

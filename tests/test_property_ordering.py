@@ -160,11 +160,9 @@ def _shard_batch(conv_turns):
 @given(st.lists(arrival_plan(), min_size=1, max_size=3), st.randoms())
 @settings(max_examples=50, deadline=None)
 def test_sharded_func_multi_conv_matches_serial_oracle(plans, rng):
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
-        make_sharded_func,
-    )
     from dataflow_ordered_processing_spark.streaming.ordered_stream import (
         OrderedStreamConfig,
+        make_sharded_func,
     )
 
     func = make_sharded_func(OrderedStreamConfig())

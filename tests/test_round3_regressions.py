@@ -1,8 +1,9 @@
 """Round-3 review findings pinned as regression tests:
 
-  R3-1  resuming a checkpoint with a different engine/n_shards must fail
-        fast (n_shards is baked into the sharded state key — a silent
-        mismatch strands state and breaks exactly-once).
+  R3-1  resuming a checkpoint with a different n_shards (or one written by
+        the retired per-conversation engine) must fail fast (n_shards is
+        baked into the state key — a silent mismatch strands state and
+        breaks exactly-once).
   R3-2  completed conversations become compact tombstones: excluded from
         heartbeat sweeps (no frozen-counter status spam), aged out silently
         under the TTL, late duplicates still discarded AND counted.
@@ -23,14 +24,10 @@ from pyspark.sql import functions as F
 
 from dataflow_ordered_processing_spark.operators import ordered_core as core
 from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
-from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     _HB_AT,
     _TOMBS,
     make_sharded_func,
-)
-from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-    _state_to_tuple,
-    make_ordered_func,
 )
 from dataflow_ordered_processing_spark.streaming.sinks import (
     _check_engine_marker,
@@ -49,19 +46,34 @@ from test_ordered_sharded import (  # reuse the fake-state harness
 
 def test_engine_marker_pins_n_shards(tmp_path):
     ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "sharded", 256)
-    _check_engine_marker(ckpt, "sharded", 256)  # same config resumes fine
+    _check_engine_marker(ckpt, 256)
+    _check_engine_marker(ckpt, 256)  # same config resumes fine
     with pytest.raises(ValueError, match="n_shards"):
-        _check_engine_marker(ckpt, "sharded", 512)
-    with pytest.raises(ValueError):
-        _check_engine_marker(ckpt, "classic", None)
+        _check_engine_marker(ckpt, 512)
 
 
-def test_engine_marker_classic_ignores_shards(tmp_path):
-    # n_shards is irrelevant to the classic engine — must not trip the marker
-    ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "classic", 256)
-    _check_engine_marker(ckpt, "classic", 512)
+def test_engine_marker_refuses_classic_checkpoint(spark, tmp_path):
+    """A checkpoint written by the retired per-conversation ("classic")
+    engine holds state this engine cannot read: resuming it is refused
+    before the query starts, and the message says to start afresh."""
+    import json
+
+    from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
+    from dataflow_ordered_processing_spark.streaming import start_ordered_pipeline
+    from dataflow_ordered_processing_spark.streaming.sinks import SinkConfig
+
+    ckpt = tmp_path / "ckpt"
+    os.makedirs(ckpt / "offsets")
+    with open(ckpt / "_ordered_engine.json", "w") as f:
+        json.dump({"engine": "classic", "n_shards": None, "pattern": None}, f)
+    src_dir = tmp_path / "src"
+    os.makedirs(src_dir)
+    source = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(src_dir))
+    sink = SinkConfig(data_path=str(tmp_path / "data"), checkpoint=str(ckpt))
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="fresh checkpoint"):
+        start_ordered_pipeline(source, sink)
+    assert len(spark.streams.active) == n_active  # refused before the start
 
 
 # ---------------------------------------------------------------- R3-2
@@ -126,33 +138,29 @@ def test_late_duplicate_after_completion_counted():
     assert tomb[3] == 1  # duplicate_count
 
 
-def test_classic_tombstone_stops_heartbeating():
-    """Classic engine: a completed key must not re-arm its timer (no TTL) and
-    a timer firing on a completed key must emit no status."""
+def test_tombstone_shard_stops_heartbeating():
+    """A shard holding only completed conversations must not re-arm its
+    timer (no TTL), and a timer firing on it must emit no status."""
     cfg = OrderedStreamConfig(status_heartbeat_ms=50)
-    func = make_ordered_func(cfg)
+    func = make_sharded_func(cfg)
 
     timer_set = []
 
-    class _KeyState(_FakeState):
+    class _TimerState(_FakeState):
         def setTimeoutDuration(self, ms):
             timer_set.append(ms)
 
-    st = core.OrderedState(last_emitted=3, last_event_received=True,
-                           received_count=3, result_count=3)
-    state = _KeyState(blob=None)
-    state._v = tuple(_state_to_tuple(st))
+    state = _TimerState(_completed_conv().get[0])
 
     # duplicate arrival to a tombstone: status still emitted (arrival path),
     # timer NOT re-armed (frozen state, nothing will ever change)
-    batch = _shard_batch_rows([("cX", 2)])
-    frames = list(func(("cX",), iter([batch]), state))
-    assert any((f["row_type"] == "status").any() for f in frames)
+    _, statuses = _collect(func((0,), iter([_shard_batch_rows([("cX", 2)])]), state))
+    assert statuses == ["cX"]
     assert timer_set == []
 
-    # timer firing on a tombstone: silent (no status row, no data)
+    # timer firing on a tombstone-only shard: silent (no status row, no data)
     state.hasTimedOut = True
-    assert list(func(("cX",), iter([]), state)) == []
+    assert list(func((0,), iter([]), state)) == []
 
 
 # ---------------------------------------------------------------- R3-3
@@ -268,7 +276,7 @@ def test_untouched_convs_not_repickled():
     entries byte-identical (the outer blob pickle then memcpys them —
     measured 13x cheaper per invocation at 10k pending convs / 100
     touched, the 100-TB sparse-touch regime)."""
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
         _conv_dumps,
     )
     import numpy as np
@@ -296,7 +304,7 @@ def test_legacy_tuple_state_blob_still_loads():
     """Checkpoints written before the pre-pickled format hold tuples —
     they must deserialize transparently (mixed dicts allowed)."""
     import numpy as np
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
         _conv_to_tuple,
     )
 
@@ -398,7 +406,7 @@ def test_marker_refuses_premarker_checkpoint(tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(os.path.join(ckpt, "offsets"))
     with pytest.raises(ValueError, match="no.*marker|marker"):
-        _check_engine_marker(ckpt, "sharded", 256)
+        _check_engine_marker(ckpt, 256)
 
 
 def test_sweep_completion_honors_cleanup_on_complete():
@@ -420,7 +428,7 @@ def test_sweep_completion_honors_cleanup_on_complete():
         "tool": np.array([None] * 3, dtype=object),
         "ts_us": np.array([1, 2, 3], dtype="int64"),
     }
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
         _conv_to_tuple,
     )
 

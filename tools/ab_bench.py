@@ -59,7 +59,7 @@ def run_scaling_leg(head_dir: str, src: str, cpus: int) -> dict:
             "--source", src, "--out", out, "--checkpoint", ckpt,
             "--available-now", "--max-files-per-trigger", "8",
             "--master", f"local[{cpus}]",
-            "--engine", "sharded", "--n-shards", "256",
+            "--n-shards", "256",
         ],
         capture_output=True, text=True, timeout=3600, cwd=head_dir,
     )

@@ -51,7 +51,6 @@ def _stream_leg(
         "--available-now",
         "--max-files-per-trigger", "8",
         "--master", f"local[{cpus}]",
-        "--engine", "sharded",
         "--n-shards", "256",
     ]
     if pattern:

@@ -26,7 +26,6 @@ def main() -> int:
     ap.add_argument("--rows", type=int, default=200_000)
     ap.add_argument("--convs", type=int, default=2_000)
     ap.add_argument("--kill-after", type=float, default=25.0)
-    ap.add_argument("--engine", choices=["classic", "sharded"], default="classic")
     ap.add_argument("--n-shards", type=int, default=256)
     ap.add_argument(
         "--merge-on-key", action="store_true",
@@ -58,7 +57,6 @@ def main() -> int:
         "--available-now",
         "--max-files-per-trigger", "4",
         "--master", "local[8]",
-        "--engine", args.engine,
         "--n-shards", str(args.n_shards),
     ]
     if args.merge_on_key:

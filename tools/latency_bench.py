@@ -23,7 +23,7 @@ time replaced by the measured arrival wall clock.
 
 Usage: python tools/latency_bench.py [--rows 400000] [--convs 5000]
        [--n-files 100] [--push-ms 400] [--trigger-ms 200] [--cpus 32]
-       [--engine sharded] [--workdir /dev/shm/latbench]
+       [--workdir /dev/shm/latbench]
 """
 
 from __future__ import annotations
@@ -78,7 +78,6 @@ def main() -> int:
         "construction (measured: p50 ≈ total run length) — that measures "
         "the feed schedule, not the engine.",
     )
-    ap.add_argument("--engine", choices=["classic", "sharded"], default="sharded")
     ap.add_argument("--warmup-files", type=int, default=10)
     ap.add_argument("--workdir", default=None)
     args = ap.parse_args()
@@ -170,7 +169,7 @@ def main() -> int:
         .option("maxFilesPerTrigger", args.files_per_trigger)
         .parquet(src)
     )
-    q = start_ordered_pipeline(reader, sink, cfg, engine=args.engine)
+    q = start_ordered_pipeline(reader, sink, cfg)
 
     # ---- feed on a cadence, recording true arrival time per turn
     import pandas as pd
@@ -236,7 +235,6 @@ def main() -> int:
         "push_ms": args.push_ms,
         "trigger_ms": args.trigger_ms,
         "cpus": args.cpus,
-        "engine": args.engine,
         "warmup_files_excluded": args.warmup_files,
         "drained": True,
         "steady_rows": int(len(steady)),

@@ -1,10 +1,10 @@
-"""Shard-count sweep for the sharded streaming engine (autotune evidence).
+"""Shard-count sweep for the streaming engine (autotune evidence).
 
 Runs the IDENTICAL full pipeline (jobs/run_pipeline.py, fresh JVM + fresh
 checkpoint per run) at a fixed core count across a range of n_shards and
 records sustained throughput per shard count → BENCH/shard_sweep.json.
 This is the measurement behind the `n_shards=None → 8 × defaultParallelism`
-default in streaming.build_ordered_stream / sinks.start_ordered_pipeline.
+default in streaming.resolve_n_shards.
 
 Usage: python tools/shard_sweep.py [--rows 4000000] [--convs 20000]
        [--cpus 32] [--shards 64 128 256 512 1024] [--workdir /dev/shm/sweep]
@@ -42,7 +42,6 @@ def run_once(src: str, cpus: int, n_shards: int, workdir: str) -> dict:
                 "--available-now",
                 "--max-files-per-trigger", "8",
                 "--master", f"local[{cpus}]",
-                "--engine", "sharded",
                 "--n-shards", str(n_shards),
             ],
             capture_output=True,

@@ -53,7 +53,6 @@ def main() -> int:
     ap.add_argument("--files", type=int, default=64)
     args = ap.parse_args()
 
-    SB.ENGINE = "sharded"
     auto = args.n_shards == "auto"
     if not auto:
         SB.N_SHARDS = int(args.n_shards)
